@@ -1,9 +1,9 @@
 package graft
 
-/** Standalone host-state probe: the same splitmix64+fp workload the
-  * bench embeds (BASELINE.md calibration), runnable in seconds between
-  * measurements so any figure can be stamped with the host state it ran
-  * under. Prints one JSON line {"st_mops":…, "mt_mops":…, "threads":N}.
+/** Standalone host-state probe: the splitmix64+fp workload `Bench`
+  * stamps its phases with (BASELINE.md calibration), runnable in seconds
+  * between measurements so any figure can be stamped with the host state
+  * it ran under. Prints one JSON line {"st_mops":…, "mt_mops":…, "threads":N}.
   * No Spark session — pure JVM, so it measures the machine, not the
   * framework.
   */

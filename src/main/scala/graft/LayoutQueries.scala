@@ -1,8 +1,8 @@
 package graft
 
-import graft.extract.Extractor
 import graft.geom.BBox
 import graft.html.Dom
+import graft.jobs.ExtractionJob
 import graft.layout._
 
 /** Per-page layout-operator drivers for the query surface: build
@@ -10,11 +10,13 @@ import graft.layout._
   * the ensemble-merge / projection operators over them. The second and
   * third "detectors" are jittered variants of the first (pure function of
   * the box geometry), standing in for the reference's multi-model
-  * ensembles (V-05.xx). */
+  * ensembles (V-05.xx). Pages are extracted through
+  * [[graft.jobs.ExtractionJob.extractPage]], so a page that fails
+  * extraction contributes an empty box set instead of failing the query. */
 object LayoutQueries {
 
   private def blockBoxes(url: String, html: Array[Byte]): Vector[Region] = {
-    val ex = Extractor.extract(url, html)
+    val ex = ExtractionJob.extractPage(url, html)
     ex.blocks.iterator.zipWithIndex.map { case (b, i) =>
       Region(BBox(b.x, b.y, b.w, b.h), order = i + 1, line = b.line)
     }.toVector
@@ -47,7 +49,7 @@ object LayoutQueries {
     * runs the paragraph stage of the pipeline and the two column
     * operators over it; emits per-page column stats. */
   def columns(url: String, html: Array[Byte]): (String, Int, Int, Long) = {
-    val ex = Extractor.extract(url, html)
+    val ex = ExtractionJob.extractPage(url, html)
     val words = ex.blocks.iterator.zipWithIndex.map { case (b, i) =>
       Word(i, BBox(b.x, b.y, b.w, b.h))
     }.toVector
@@ -67,7 +69,7 @@ object LayoutQueries {
   /** F6: layout-class filter — table/figure blocks become zones; paragraph
     * envelopes ≥50% inside them are dropped. Emits (kept, dropped). */
   def layoutFilter(url: String, html: Array[Byte]): (String, Int, Int) = {
-    val ex = Extractor.extract(url, html)
+    val ex = ExtractionJob.extractPage(url, html)
     val zones = ex.blocks.iterator
       .filter(b => b.label == "table_cell" || b.label == "caption")
       .map(b => (b.x.toDouble, b.y.toDouble, (b.x + b.w).toDouble, (b.y + b.h).toDouble))
@@ -140,7 +142,7 @@ object LayoutQueries {
     * `add_region_padding`). Emits the post-processed xyxy per block. */
   def postprocess(url: String, html: Array[Byte], padding: Int = 5)
       : Seq[(String, Int, Int, Int, Int, Int)] = {
-    val ex = Extractor.extract(url, html)
+    val ex = ExtractionJob.extractPage(url, html)
     val boxes = ex.blocks.map(b => BBox(b.x, b.y, b.w, b.h)).toIndexedSeq
     if (boxes.isEmpty) return Seq.empty
     val pageW = 960
@@ -178,7 +180,7 @@ object LayoutQueries {
     * representable input. */
   def geometryProjection(url: String, html: Array[Byte])
       : Seq[(String, Int, Int, Int, Int, Int)] = {
-    val ex = Extractor.extract(url, html)
+    val ex = ExtractionJob.extractPage(url, html)
     ex.blocks.iterator.zipWithIndex.map { case (b, i) =>
       val norm = (b.x / 4000.0, b.y / 8000.0,
         (b.x + b.w) / 4000.0, (b.y + b.h) / 8000.0)

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.extract.Extractor
 import graft.graph.GraphOps
+import graft.jobs.ExtractionJob
 import graft.pages.PagesTable
 import graft.sim.{Ann, AnnIndex}
 import graft.text.{LangId, ScriptId, TextOps}
@@ -35,7 +35,7 @@ object SparkEntry {
   private def extractedDf(s: SparkSession, sfDir: String): DataFrame = {
     import s.implicits._
     pagesDf(s, sfDir).select("url", "html").as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (u, h) => Extractor.extract(u, h) })
+      .mapPartitions(_.map { case (u, h) => ExtractionJob.extractPage(u, h) })
       .toDF()
   }
 

@@ -2,7 +2,9 @@ package graft.jobs
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.TaskContext
 import graft.extract.{Extracted, Extractor}
@@ -27,13 +29,17 @@ final case class PartitionMetrics(
   *                   sidecars (raw-FS scratch, deliberately NOT table IO);
   *                   defaults to `outPath`, which is right whenever `io`
   *                   is path-addressed. A catalog-addressed `io` must
-  *                   pass an explicit shared-FS scratch dir. */
+  *                   pass an explicit shared-FS scratch dir.
+  * @param retryFailed re-extract the urls a previous run committed as
+  *                   `failed = true` under the job's single failure
+  *                   policy ([[ExtractionJob.extractPage]]); by default
+  *                   they count as committed, so a crash loop cannot
+  *                   re-attempt them forever. */
 final case class JobConfig(
     pagesPath: String,
     outPath: String,
     saltBuckets: Int = 64,
     runId: String = "run",
-    metricsEnabled: Boolean = true,
     retryFailed: Boolean = false,
     io: TableIO = ParquetTableIO,
     scratchPath: String = "",
@@ -62,22 +68,43 @@ final case class JobConfig(
   * only the pages INPUT path and the metric-sidecar scratch dir are raw
   * addresses (the input may equally be a catalog table read upstream and
   * passed in as a DataFrame via [[extractDataset]]).
+  *
+  * Failure policy: one, in [[extractPage]] — a page whose extraction
+  * throws a NonFatal error (a null `html` included) is committed as a
+  * `failed = true` row with empty text, spans and blocks; it never aborts
+  * the task. Every extraction site (this job, [[StreamingExtraction]],
+  * the query board and the bench) goes through that function.
   */
 object ExtractionJob {
+
+  /** The per-page extraction kernel and the single failure policy: a
+    * NonFatal error becomes `Extracted(url, "", [], [], failed = true)`.
+    * Fatal errors still propagate — a StackOverflowError is kept out of
+    * reach by the parser's depth cap (`Dom.MaxDepth`), not caught here. */
+  def extractPage(url: String, html: Array[Byte]): Extracted =
+    try Extractor.extract(url, html)
+    catch {
+      case NonFatal(_) => Extracted(url, "", Array.empty, Array.empty, failed = true)
+    }
+
+  /** Only an explicit `failed = true` marks a failed row; null or absent
+    * (pre-`failed`-column layouts, or null after schema merge) counts as
+    * committed. */
+  private val isFailed: Column = coalesce(col("failed").cast("boolean"), lit(false))
 
   /** Urls already committed to the extracted table, or None on first run.
     * With `retryFailed` the rows whose extraction failed (committed with
     * `failed = true` so a crash loop cannot re-attempt them forever) are
     * NOT treated as committed — the next run re-extracts exactly them.
-    * Rows from pre-`failed`-column layouts (column absent, or null after
-    * schema merge) count as committed: only an explicit `true` retries. */
+    * Rows from pre-`failed`-column layouts count as committed (see
+    * `isFailed`): only an explicit `true` retries. */
   def committedUrls(spark: SparkSession, cfg: JobConfig): Option[DataFrame] = {
     if (!cfg.io.hasData(spark, cfg.extractedTable)) None
     else {
       val extracted = cfg.io.read(spark, cfg.extractedTable)
       val committed =
         if (cfg.retryFailed && extracted.columns.contains("failed"))
-          extracted.filter(!coalesce(col("failed").cast("boolean"), lit(false)))
+          extracted.filter(!isFailed)
         else extracted
       Some(committed.select("url"))
     }
@@ -96,7 +123,7 @@ object ExtractionJob {
                     io: TableIO = ParquetTableIO): DataFrame = {
     val df = io.read(spark, extractedRoot)
     if (df.columns.contains("failed"))
-      df.filter(!coalesce(col("failed").cast("boolean"), lit(false))).drop("failed")
+      df.filter(!isFailed).drop("failed")
     else df
   }
 
@@ -136,9 +163,7 @@ object ExtractionJob {
       return
     }
     val withFailed =
-      if (df.columns.contains("failed"))
-        df.withColumn("failed",
-          coalesce(col("failed").cast("boolean"), lit(false)))
+      if (df.columns.contains("failed")) df.withColumn("failed", isFailed)
       else df.withColumn("failed", lit(false))
     withFailed.write.mode(SaveMode.Overwrite).partitionBy("failed")
       .parquet(tmp.toString)
@@ -189,15 +214,7 @@ object ExtractionJob {
   /** Run extraction; returns the extracted Dataset (not yet written). */
   def extractDataset(spark: SparkSession, work: DataFrame, cfg: JobConfig): Dataset[Extracted] = {
     import spark.implicits._
-    work.as[(String, Array[Byte])].mapPartitions { it =>
-      it.map { case (url, html) =>
-        try Extractor.extract(url, html)
-        catch {
-          case scala.util.control.NonFatal(_) =>
-            Extracted(url, "", Array.empty, Array.empty, failed = true)
-        }
-      }
-    }
+    work.as[(String, Array[Byte])].mapPartitions(_.map { case (u, h) => extractPage(u, h) })
   }
 
   /** One JSON line per counter row — the executor-side sidecar format. */
@@ -248,18 +265,8 @@ object ExtractionJob {
     }
     val confBc = spark.sparkContext.broadcast(confEntries)
 
-    val metricsOn = cfg.metricsEnabled
     val extracted: Dataset[Extracted] =
       work.as[(String, Array[Byte])].mapPartitions { it =>
-        if (!metricsOn) {
-          it.map { case (url, html) =>
-            try Extractor.extract(url, html)
-            catch {
-              case scala.util.control.NonFatal(_) =>
-                Extracted(url, "", Array.empty, Array.empty, failed = true)
-            }
-          }
-        } else {
         val t0 = System.nanoTime()
         var docs = 0L
         var bytes = 0L
@@ -268,15 +275,15 @@ object ExtractionJob {
         val pid = TaskContext.getPartitionId()
         val out = it.map { case (url, html) =>
           docs += 1
-          bytes += html.length
-          try Extractor.extract(url, html)
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              failures += 1
-              Extracted(url, "", Array.empty, Array.empty, failed = true)
-          }
+          if (html != null) bytes += html.length
+          val ex = extractPage(url, html)
+          if (ex.failed) failures += 1
+          ex
         }
-        // wrap so the counter sidecar flushes after the partition is consumed
+        // wrap so the counter sidecar flushes after the partition is consumed.
+        // Drain-only on purpose, not a task-completion listener: a killed
+        // speculative attempt (higher attempt number) would then write a
+        // partial sidecar, and the max-attempt dedupe below would keep it.
         new Iterator[Extracted] {
           def hasNext: Boolean = {
             val h = out.hasNext
@@ -309,7 +316,6 @@ object ExtractionJob {
                 s"metrics sidecar rename $tmp -> $path failed")
           }
         }
-        }
       }
 
     // `failed` as a partition column: the (tiny) failure partition stays
@@ -331,10 +337,8 @@ object ExtractionJob {
     if (cfg.retryFailed) {
       val all = cfg.io.read(spark, cfg.extractedTable)
       if (all.columns.contains("failed")) {
-        val stillFailing = all.filter(coalesce(col("failed").cast("boolean"), lit(false)))
-          .drop("failed")
-          .join(all.filter(!coalesce(col("failed").cast("boolean"), lit(false)))
-            .select("url"), Seq("url"), "left_anti")
+        val stillFailing = all.filter(isFailed).drop("failed")
+          .join(all.filter(!isFailed).select("url"), Seq("url"), "left_anti")
           .dropDuplicates("url")
         cfg.io.replacePartition(spark, cfg.extractedTable, "failed", "true",
           stillFailing)

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
-import graft.extract.{Extracted, Extractor}
+import graft.extract.Extracted
 
 /** Running per-host crawl-progress state (mapGroupsWithState). */
 final case class HostState(docs: Long, bytes: Long)
@@ -326,6 +326,9 @@ object StreamingExtraction {
       }
   }
 
+  /** The batch job's per-page kernel ([[ExtractionJob.extractPage]]) over
+    * a file-source stream: a page that fails extraction becomes a
+    * `failed = true` row in the sink instead of aborting the query. */
   def extractedStream(spark: SparkSession, pagesDir: String,
                       pagesSchemaFrom: String): Dataset[Extracted] = {
     import spark.implicits._
@@ -336,7 +339,7 @@ object StreamingExtraction {
       .parquet(pagesDir)
       .select("url", "html")
       .as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (u, h) => Extractor.extract(u, h) })
+      .mapPartitions(_.map { case (u, h) => ExtractionJob.extractPage(u, h) })
   }
 
   /** Start the stream; caller awaits/stops. */

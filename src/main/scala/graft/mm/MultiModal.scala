@@ -1,5 +1,6 @@
 package graft.mm
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,15 +52,20 @@ object MultiModal {
   }
 
   /** Per-partition codec lifecycle: open before the first row, decode
-    * each row through `f`, close exactly once when exhausted. */
+    * each row through `f`, close exactly once — when exhausted, or at task
+    * completion if the consumer stops early (`limit`/`take`) or the task
+    * fails. Off a task (driver-side use) only exhaustion closes. */
   private def codecIterator[T](codec: MediaCodec, it: Iterator[(String, Array[Byte])],
                                f: (MediaCodec, String, Array[Byte]) => T): Iterator[T] = {
     codec.open()
     var closed = false
+    def closeOnce(): Unit = if (!closed) { closed = true; codec.close() }
+    Option(TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
     new Iterator[T] {
       def hasNext: Boolean = {
         val h = it.hasNext
-        if (!h && !closed) { closed = true; codec.close() }
+        if (!h) closeOnce()
         h
       }
       def next(): T = { val (id, bytes) = it.next(); f(codec, id, bytes) }

@@ -38,9 +38,10 @@ final case class GenPage(row: PageRow, meta: PageMeta, spans: Vector[SpanGolden]
   * chrome (header/nav/aside/footer/cookie banner, high link density) around
   * main-content paragraphs, headings, lists, tables, quotes, code — and
   * computes the EXPECTED extraction from the content parts directly (not
-  * by running the extractor), so `Extractor.extract(html).text == text`
-  * is a real self-consistent golden, per the extraction contract:
-  * whitespace-normalised blocks, document order, '\n'-joined.
+  * by running the extractor), so the `text` `Extractor.extract` returns
+  * for `html` equals `text`: a real self-consistent golden, per the
+  * extraction contract: whitespace-normalised blocks, document order,
+  * '\n'-joined.
   *
   * v2 additionally emits golden sidecar tables ([[SpanGolden]], [[PageMeta]])
   * so the driver's DuckDB oracle can hash-check the layout/attribute branch

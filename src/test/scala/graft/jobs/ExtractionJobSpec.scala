@@ -74,6 +74,34 @@ class ExtractionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(docsR3 == 0)
   }
 
+  test("failure policy: a null-html page commits as failed, counts once, and is retried alone") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val base = s"$tmp/nullhtml"
+    val pages = PagesTable.generate(spark, seed = 5L, n = 40, partitions = 2).toDF()
+    val bad = pages.select("url").as[String].collect().min
+    pages.withColumn("html",
+        when(col("url") === bad, lit(null).cast("binary")).otherwise(col("html")))
+      .write.parquet(s"$base/pages")
+
+    val cfg = JobConfig(s"$base/pages", s"$base/out", runId = "n1")
+    assert(ExtractionJob.run(spark, cfg) == 39, "the job completes; n-1 successes")
+    assert(new java.io.File(s"$base/out/extracted/failed=true").exists())
+    val failed = spark.read.parquet(s"$base/out/extracted")
+      .filter(col("failed").cast("boolean")).select("url", "text").as[(String, String)]
+      .collect()
+    assert(failed.toSeq == Seq(bad -> ""), "committed once, in the failure partition")
+    val m = ExtractionJob.readMetrics(spark, cfg).collect()
+    assert(m.map(_.extraction_failures).sum == 1)
+    assert(m.map(_.docs_parsed).sum == 40)
+    val ok = ExtractionJob.readExtracted(spark, cfg).select("url").as[String].collect()
+    assert(ok.length == 39 && !ok.contains(bad), "readExtracted excludes the failed url")
+    val retry = ExtractionJob.planWorkSet(spark, cfg.copy(retryFailed = true))
+    assert(retry.select("url").as[String].collect().toSeq == Seq(bad),
+      "a retryFailed rerun plans exactly the failed url")
+  }
+
   test("retryFailed resume re-attempts failed rows, default resume does not") {
     val s = spark
     import s.implicits._

@@ -41,6 +41,25 @@ class StreamingExtractionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(joined.filter(col("got") =!= col("text")).count() == 0)
   }
 
+  test("failure policy: a null-html page streams through as a failed row") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val pagesDir = s"$tmp/pages_nullhtml"
+    val pages = PagesTable.generate(spark, 42L, 30, partitions = 2).toDF()
+    val bad = pages.select("url").as[String].collect().min
+    pages.withColumn("html",
+        when(col("url") === bad, lit(null).cast("binary")).otherwise(col("html")))
+      .write.parquet(pagesDir)
+
+    val q = StreamingExtraction.start(spark, pagesDir, s"$tmp/out_nullhtml", pagesDir)
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty, s"the query must not abort: ${q.exception}")
+    val out = spark.read.parquet(s"$tmp/out_nullhtml/extracted")
+    assert(out.count() == 30)
+    assert(out.filter(col("failed")).select("url").as[String].collect().toSeq == Seq(bad))
+  }
+
   test("watermarked windowed metrics and mapGroupsWithState host progress") {
     val s = spark
     import s.implicits._

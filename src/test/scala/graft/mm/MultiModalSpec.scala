@@ -69,6 +69,25 @@ class MultiModalSpec extends AnyFunSuite with BeforeAndAfterAll {
       CodecProbe.opened.get() > 0)
   }
 
+  test("the codec closes at task completion when the consumer stops early") {
+    val codec = new MultiModal.MediaCodec {
+      def decode(id: String, bytes: Array[Byte]): MultiModal.MediaMeta =
+        MultiModal.decodeStub(id, bytes)
+      def features(id: String, bytes: Array[Byte]): MultiModal.MediaFeatures =
+        MultiModal.MediaFeatures(id, Array(1f))
+      override def open(): Unit = CodecProbe.opened.incrementAndGet()
+      override def close(): Unit = CodecProbe.closed.incrementAndGet()
+    }
+    CodecProbe.opened.set(0); CodecProbe.closed.set(0)
+    // one partition of 3 rows, of which limit(1) reads one: the iterator
+    // is never drained, so only the task-completion hook can close
+    val got = MultiModal.features(spark, media.coalesce(1), codec = codec).limit(1).collect()
+    assert(got.length == 1)
+    assert(CodecProbe.opened.get() > 0, "open() never ran")
+    assert(CodecProbe.closed.get() == CodecProbe.opened.get(),
+      "a codec opened by an early-stopped task must still close exactly once")
+  }
+
   test("frame sampling strides the decoded frame count") {
     val metas = MultiModal.decode(spark, media)
     val frames = MultiModal.sampleFrames(spark, metas, everyN = 2).collect()
